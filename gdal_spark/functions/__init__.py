@@ -47,9 +47,10 @@ from gdal_spark.geometry.boolean import (
     segments_intersect_any,
 )
 from gdal_spark.geometry.clip import shoelace_area
-from gdal_spark.geometry.pip import points_in_polygon
+from gdal_spark.geometry.pip import RingTable, points_in_polygon, ring_table
 from gdal_spark.geometry.wkb import wkb_to_payload, wkt_payload_to_wkb
 from gdal_spark.geometry.wkt import parse_wkt, payload_to_wkt, polygon_wkt
+from gdal_spark.operators.pip_join import factorize_geometry, grouped_pip
 
 __all__ = [
     "st_area",
@@ -226,18 +227,28 @@ def _bbox_intersects_batch(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(hit)
 
 
+# executor-level edge-table cache for ST_Contains (same bound as parsing)
+_RING_CACHE: dict[str, RingTable] = {}
+
+
+def _ring_table_of(wkt: str) -> RingTable:
+    t = _RING_CACHE.get(wkt)
+    if t is None:
+        t = ring_table(_as_polys(wkt))
+        if len(_RING_CACHE) >= _PARSE_CACHE_MAX:
+            _RING_CACHE.clear()
+        _RING_CACHE[wkt] = t
+    return t
+
+
 def _contains_point_batch(poly: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-    xs = x.to_numpy(np.float64)
-    ys = y.to_numpy(np.float64)
-    uniq, inv = np.unique(poly.to_numpy(dtype=object), return_inverse=True)
-    out = np.zeros(len(xs), dtype=bool)
-    for i, wkt in enumerate(uniq):
-        mask = inv == i
-        hit = np.zeros(int(mask.sum()), dtype=bool)
-        for rings in _as_polys(wkt):
-            hit |= points_in_polygon(xs[mask], ys[mask], rings)
-        out[mask] = hit
-    return pd.Series(out)
+    codes, uniq = factorize_geometry(poly)
+    return pd.Series(
+        grouped_pip(
+            x.to_numpy(np.float64), y.to_numpy(np.float64), codes, uniq,
+            _ring_table_of,
+        )
+    )
 
 
 _st_area_udf = F.pandas_udf(_per_unique(_area, np.float64), DoubleType())

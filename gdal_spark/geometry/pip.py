@@ -13,9 +13,20 @@ step that runs inside Arrow-batched pandas UDFs after the cell-key join.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
-__all__ = ["points_in_ring", "points_in_polygon", "points_in_polygon_wkt"]
+__all__ = [
+    "points_in_ring",
+    "points_in_polygon",
+    "points_in_polygon_wkt",
+    "RingTable",
+    "ring_table",
+    "stack_ring_tables",
+    "points_in_polygons",
+    "points_in_geometries",
+]
 
 
 def points_in_ring(xs: np.ndarray, ys: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -74,3 +85,165 @@ def points_in_polygon_wkt(xs, ys, wkt: str) -> np.ndarray:
             inside |= points_in_polygon(xs, ys, poly)
         return inside
     raise ValueError(f"PIP needs polygonal WKT, got {typ}")
+
+
+# ---------------------------------------------------- grouped batch kernel
+# The refine step of a join sees one Arrow batch holding thousands of
+# DISTINCT zones; a Python loop over them (one points_in_polygon call
+# per zone) would be the hot path.  The batch kernel below flattens
+# every distinct geometry into one edge table and expands candidate
+# rows against their own geometry's rings and edges with np.repeat +
+# offsets: a fixed number of numpy passes per chunk of rows, whatever
+# the zone count.  Arithmetic is the per-ring kernel's, term for term,
+# so the result is bit-identical to the loop over points_in_polygon.
+
+# (row, edge) pairs expanded at once: bounds the kernel's temporaries
+# (~100 B per pair) at a few MB however many vertices the batch's zones
+# carry, small enough to stay cache-resident
+PIP_CHUNK_EDGES = 1 << 16
+
+_NO_ENV = (np.inf, np.inf, -np.inf, -np.inf)  # fails every envelope test
+
+
+class RingTable(NamedTuple):
+    """Flattened rings and edges of G multipolygon geometries, stored
+    in list order: geometry g owns the next ``geom_nring[g]`` rings,
+    ring r the next ``rings[r, 5]`` edges.  Edge i runs from
+    ``edges[2:4, i]`` to ``edges[0:2, i]`` (the per-ring kernel's
+    ``ring[:-1]`` -> ``ring[1:]``).  Rings with fewer than 4 vertices
+    keep no edges and an envelope no point passes, which is the
+    per-ring kernel's early return.  Every geometry owns at least one
+    part, so an empty one still has a (never-inside) parity slot."""
+
+    geom_npart: np.ndarray  # (G,) int64
+    geom_nring: np.ndarray  # (G,) int64
+    geom_nedge: np.ndarray  # (G,) int64
+    rings: np.ndarray  # (R, 6): xmin, ymin, xmax, ymax, part in geom, edges
+    edges: np.ndarray  # (4, E): x1, y1, x2, y2
+
+
+def ring_table(polys: list) -> RingTable:
+    """Edge table of ONE multipolygon payload (list of polygons, each a
+    list of closed (N, 2) rings: shell first, then holes)."""
+    rings, segs = [], []
+    for k, poly in enumerate(polys):
+        for ring in poly:
+            r = np.asarray(ring, dtype=np.float64).reshape(-1, 2)
+            if r.shape[0] < 4:
+                rings.append((*_NO_ENV, k, 0))
+                continue
+            lo = r.min(axis=0)
+            hi = r.max(axis=0)
+            rings.append((lo[0], lo[1], hi[0], hi[1], k, r.shape[0] - 1))
+            segs.append(np.concatenate([r[1:], r[:-1]], axis=1).T)
+    edges = np.concatenate(segs, axis=1) if segs else np.empty((4, 0))
+    return RingTable(
+        geom_npart=np.array([max(len(polys), 1)], dtype=np.int64),
+        geom_nring=np.array([len(rings)], dtype=np.int64),
+        geom_nedge=np.array([edges.shape[1]], dtype=np.int64),
+        rings=np.array(rings, dtype=np.float64).reshape(-1, 6),
+        edges=edges,
+    )
+
+
+def stack_ring_tables(tables: list[RingTable]) -> RingTable:
+    """One table for many geometries, in list order (geometry index =
+    list position).  Five concatenations — callers cache per-geometry
+    tables and stack the distinct ones of each batch."""
+    if len(tables) == 1:
+        return tables[0]
+    cat = np.concatenate
+    return RingTable(
+        geom_npart=cat([t.geom_npart for t in tables]),
+        geom_nring=cat([t.geom_nring for t in tables]),
+        geom_nedge=cat([t.geom_nedge for t in tables]),
+        rings=cat([t.rings for t in tables]),
+        edges=cat([t.edges for t in tables], axis=1),
+    )
+
+
+def _offsets(counts: np.ndarray) -> np.ndarray:
+    return np.concatenate([[0], np.cumsum(counts, dtype=np.int64)])
+
+
+def expand_counts(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(owner, rank) of the flattened ragged expansion: owner i repeated
+    counts[i] times, rank 0..counts[i]-1 within each owner."""
+    owner = np.repeat(np.arange(counts.size), counts)
+    first = np.cumsum(counts) - counts
+    return owner, np.arange(owner.size) - first[owner]
+
+
+def chunk_bounds(work: np.ndarray, budget: int) -> np.ndarray:
+    """Row boundaries splitting rows into consecutive chunks whose
+    summed ``work`` stays within ``budget`` (plus at most one row)."""
+    start = np.cumsum(work) - work
+    cut = np.flatnonzero(np.diff(start // budget)) + 1
+    return np.concatenate([[0], cut, [work.size]])
+
+
+def points_in_polygons(
+    xs: np.ndarray, ys: np.ndarray, gidx: np.ndarray, table: RingTable
+) -> np.ndarray:
+    """Row i inside geometry ``gidx[i]`` of ``table`` — the batch-grouped
+    twin of ``points_in_polygon`` (XOR over a polygon's rings, OR over
+    a multipolygon's parts).  Returns (M,) bool."""
+    xs = np.asarray(xs, dtype=np.float64)
+    ys = np.asarray(ys, dtype=np.float64)
+    gidx = np.asarray(gidx, dtype=np.int64)
+    out = np.zeros(xs.shape[0], dtype=bool)
+    if xs.shape[0] == 0:
+        return out
+    geom_ring = _offsets(table.geom_nring)
+    ring_edge = _offsets(table.rings[:, 5].astype(np.int64))
+    b = chunk_bounds(table.geom_nedge[gidx], PIP_CHUNK_EDGES)
+    for lo, hi in zip(b[:-1], b[1:]):
+        out[lo:hi] = _pip_chunk(
+            xs[lo:hi], ys[lo:hi], gidx[lo:hi], table, geom_ring, ring_edge
+        )
+    return out
+
+
+def _pip_chunk(px, py, g, t: RingTable, geom_ring, ring_edge) -> np.ndarray:
+    # (row, ring) pairs, then the per-ring envelope pretest
+    # (ogrlinearring.cpp:487-497)
+    row, k = expand_counts(t.geom_nring[g])
+    ring = geom_ring[g][row] + k
+    env = t.rings[ring]
+    x = px[row]
+    y = py[row]
+    ok = (x >= env[:, 0]) & (x <= env[:, 2]) & (y >= env[:, 1]) & (y <= env[:, 3])
+    row = row[ok]
+    ring = ring[ok]
+    # (row, edge) pairs of the surviving rings: the crossing loop
+    # (ogrlinearring.cpp:499-532), same arithmetic as points_in_ring
+    pair, k = expand_counts(ring_edge[ring + 1] - ring_edge[ring])
+    e = ring_edge[ring][pair] + k
+    r = row[pair]
+    ex1, ey1, ex2, ey2 = t.edges
+    y1 = ey1[e] - py[r]
+    y2 = ey2[e] - py[r]
+    s = np.flatnonzero(((y1 > 0) & (y2 <= 0)) | ((y2 > 0) & (y1 <= 0)))
+    y1 = y1[s]
+    y2 = y2[s]
+    x1 = ex1[e[s]] - px[r[s]]
+    x2 = ex2[e[s]] - px[r[s]]
+    hit = s[(x1 * y2 - x2 * y1) / (y2 - y1) > 0.0]
+    # crossing parity per (row, part), then OR over each row's parts
+    npart = t.geom_npart[g]
+    first = np.cumsum(npart) - npart
+    slot = first[r[hit]] + t.rings[ring[pair[hit]], 4].astype(np.int64)
+    odd = np.bincount(slot, minlength=int(npart.sum())) & 1
+    return np.add.reduceat(odd, first) > 0
+
+
+def points_in_geometries(
+    xs: np.ndarray, ys: np.ndarray, gidx: np.ndarray, geoms: list
+) -> np.ndarray:
+    """:func:`points_in_polygons` over a list of multipolygon payloads
+    (uncached flattening; the Spark kernels cache per-geometry tables)."""
+    if not geoms:
+        return np.zeros(np.asarray(xs).shape[0], dtype=bool)
+    return points_in_polygons(
+        xs, ys, gidx, stack_ring_tables([ring_table(p) for p in geoms])
+    )

@@ -226,8 +226,18 @@ def encode_mvt_rect_tiles(rects: DataFrame) -> DataFrame:
 # tests/test_mvt.py.
 
 
+# _varint_lens_np counts at most 5 digits: larger (or negative) values
+# would be written truncated, so they are refused instead
+VARINT_LIMIT = 1 << 35
+
+
 def _varint_lens_np(vals: np.ndarray) -> np.ndarray:
     v = vals.astype(np.int64)
+    if v.size and (v.min() < 0 or v.max() >= VARINT_LIMIT):
+        raise ValueError(
+            f"MVT varint value out of range [0, 2^35): "
+            f"min {v.min()}, max {v.max()}"
+        )
     return (
         1
         + (v >= 128).astype(np.int64)
@@ -235,6 +245,13 @@ def _varint_lens_np(vals: np.ndarray) -> np.ndarray:
         + (v >= 2097152).astype(np.int64)
         + (v >= 268435456).astype(np.int64)
     )
+
+
+def _one_byte(lens: np.ndarray, what: str) -> np.ndarray:
+    """Length prefixes the writers store as ONE byte (varint < 128)."""
+    if lens.size and lens.max() >= 128:
+        raise ValueError(f"MVT {what} length {lens.max()} needs a multi-byte varint")
+    return lens
 
 
 def _scatter_varints(buf: np.ndarray, starts: np.ndarray,
@@ -266,14 +283,14 @@ def mvt_point_tile_np(fids: np.ndarray, pxs: np.ndarray,
     buf = np.zeros(total, dtype=np.uint8)
     body_len = 6 + lid + lx + ly
     buf[starts] = 0x12
-    buf[starts + 1] = body_len
+    buf[starts + 1] = _one_byte(body_len, "feature")
     buf[starts + 2] = 0x08
     _scatter_varints(buf, starts + 3, fid, lid)
     p = starts + 3 + lid
     buf[p] = 0x18
     buf[p + 1] = 0x01
     buf[p + 2] = 0x22
-    buf[p + 3] = 1 + lx + ly  # geom_len, single byte
+    buf[p + 3] = _one_byte(1 + lx + ly, "geometry")
     buf[p + 4] = 0x09
     _scatter_varints(buf, p + 5, zx, lx)
     _scatter_varints(buf, p + 5 + lx, zy, ly)
@@ -312,14 +329,14 @@ def mvt_rect_tile_np(fids: np.ndarray, x0: np.ndarray, y0: np.ndarray,
         np.cumsum(framed[:-1], out=starts[1:])
     buf = np.zeros(int(framed.sum()), dtype=np.uint8)
     buf[starts] = 0x12
-    buf[starts + 1] = body_len
+    buf[starts + 1] = _one_byte(body_len, "feature")
     buf[starts + 2] = 0x08
     _scatter_varints(buf, starts + 3, fid, lid)
     p = starts + 3 + lid
     buf[p] = 0x18
     buf[p + 1] = 0x03
     buf[p + 2] = 0x22
-    buf[p + 3] = geom_len
+    buf[p + 3] = _one_byte(geom_len, "geometry")
     buf[p + 4] = 0x09
     q = p + 5
     _scatter_varints(buf, q, zx0, lx0)
@@ -365,9 +382,10 @@ def mvt_attr_point_tile(
     layer = b"\x0a" + _varint(len(LAYER_NAME)) + LAYER_NAME
     for fid, px, py, a in sorted(features):
         geom = _varint(9) + _varint(_zigzag(px)) + _varint(_zigzag(py))
+        vi = _varint(vidx[a])
         body = (
             b"\x08" + _varint(fid)
-            + b"\x12\x02\x00" + _varint(vidx[a])     # tags [0, vi]
+            + b"\x12" + _varint(1 + len(vi)) + b"\x00" + vi  # tags [0, vi]
             + b"\x18\x01"
             + b"\x22" + _varint(len(geom)) + geom
         )
@@ -405,7 +423,7 @@ def mvt_attr_point_tile_np(
         np.cumsum(framed[:-1], out=starts[1:])
     buf = np.zeros(int(framed.sum()), dtype=np.uint8)
     buf[starts] = 0x12
-    buf[starts + 1] = framed - 2
+    buf[starts + 1] = _one_byte(framed - 2, "feature")
     buf[starts + 2] = 0x08
     _scatter_varints(buf, starts + 3, fid, lid)
     p = starts + 3 + lid
@@ -417,7 +435,7 @@ def mvt_attr_point_tile_np(
     buf[p] = 0x18
     buf[p + 1] = 0x01
     buf[p + 2] = 0x22
-    buf[p + 3] = 1 + lx + ly
+    buf[p + 3] = _one_byte(1 + lx + ly, "geometry")
     buf[p + 4] = 0x09
     _scatter_varints(buf, p + 5, zx, lx)
     _scatter_varints(buf, p + 5 + lx, zy, ly)

@@ -23,8 +23,10 @@ Spark-first plan (replacing the reference's index nested loop):
      axis-aligned rectangle zones take the exact min/max fast path (the
      reference's rect-filter special case, ogrlayer.cpp:2276-2303);
      GENERAL zones — concave, holes, multipolygon — go through the
-     signed fan-triangle decomposition (geometry/boolean.py), one
-     vectorized Sutherland–Hodgman pass per batch.
+     signed fan-triangle decomposition (geometry/boolean.py): the
+     batch's distinct zones are stacked into one triangle table and
+     every (doc, triangle) pair of the batch is clipped by ONE grouped
+     Sutherland–Hodgman kernel, whatever the number of zones.
 
 Union-of-B semantics (Clip/Erase/coverage against an OVERLAPPING method
 layer) are exact for RECTILINEAR zones via per-zone decomposition into
@@ -54,11 +56,12 @@ from gdal_spark.geometry.boolean import (
     polys_area,
     polys_pair_intersection_area,
     rectilinear_rects,
-    rects_polys_intersection_area,
+    rects_geoms_intersection_area,
+    triangle_table,
     weighted_triangles,
 )
 from gdal_spark.geometry.wkt import _fmt, parse_wkt
-from gdal_spark.operators.pip_join import zone_cell_index
+from gdal_spark.operators.pip_join import factorize_geometry, zone_cell_index
 
 DEFAULT_ZOOM = 5
 
@@ -165,6 +168,51 @@ def _classify_zone(wkt, geom_format: str = "wkt"):
     return v
 
 
+def _zone_envs(infos: list) -> np.ndarray:
+    """(G, 4) rectangle of each classified zone (zeros for general)."""
+    return np.array(
+        [info[1] if info[0] == "rect" else (0.0,) * 4 for info in infos],
+        dtype=np.float64,
+    ).reshape(-1, 4)
+
+
+def _rect_clip(rects: np.ndarray, env: np.ndarray):
+    """Rect x rect pieces: (ix0, iy0, ix1, iy1, nonempty) per row of
+    (N, 4) doc rects against (N, 4) zone rects — exact IEEE min/max."""
+    ix0 = np.maximum(rects[:, 0], env[:, 0])
+    iy0 = np.maximum(rects[:, 1], env[:, 1])
+    ix1 = np.minimum(rects[:, 2], env[:, 2])
+    iy1 = np.minimum(rects[:, 3], env[:, 3])
+    return ix0, iy0, ix1, iy1, (ix0 < ix1) & (iy0 < iy1)
+
+
+def zone_clip_areas(rects: np.ndarray, codes: np.ndarray, infos: list):
+    """area(rect_i ∩ zone infos[codes[i]]) for a batch of doc envelopes
+    against classified zones (:func:`_classify_zone` values).
+
+    Returns (areas, rect_rows).  Rectangle zones take the min/max path;
+    every general (concave / holed / multipart) zone row goes through
+    ONE grouped fan-triangle kernel call
+    (``boolean.rects_geoms_intersection_area``) — no per-zone loop."""
+    areas = np.zeros(len(rects), dtype=np.float64)
+    is_rect = np.array([info[0] == "rect" for info in infos], dtype=bool)
+    rect_rows = is_rect[codes]
+    if rect_rows.any():
+        ix0, iy0, ix1, iy1, nonempty = _rect_clip(
+            rects[rect_rows], _zone_envs(infos)[codes[rect_rows]]
+        )
+        areas[rect_rows] = np.where(nonempty, (ix1 - ix0) * (iy1 - iy0), 0.0)
+    gen = ~rect_rows
+    if gen.any():
+        # general zones renumbered densely into one stacked soup table
+        tri_of = np.cumsum(~is_rect) - 1
+        table = triangle_table([info[1] for info in infos if info[0] != "rect"])
+        areas[gen] = rects_geoms_intersection_area(
+            rects[gen], tri_of[codes[gen]], table
+        )
+    return areas, rect_rows
+
+
 def _clip_kernel(
     zone_wkt_col: str,
     doc_wkt_col: str | None,
@@ -182,57 +230,31 @@ def _clip_kernel(
             n = len(pdf)
             if n == 0:
                 continue
-            areas = np.zeros(n, dtype=np.float64)
             wkts = np.full(n, None, dtype=object)
-            xmin = pdf["xmin"].to_numpy(np.float64)
-            ymin = pdf["ymin"].to_numpy(np.float64)
-            xmax = pdf["xmax"].to_numpy(np.float64)
-            ymax = pdf["ymax"].to_numpy(np.float64)
-            uniq, inv = np.unique(
-                pdf[zone_wkt_col].to_numpy(dtype=object), return_inverse=True
-            )
+            rects = pdf[["xmin", "ymin", "xmax", "ymax"]].to_numpy(np.float64)
+            codes, uniq = factorize_geometry(pdf[zone_wkt_col], geom_format)
             infos = [_classify_zone(w, geom_format) for w in uniq]
             if doc_wkt_col is None:
-                rect_rows = np.array([infos[i][0] == "rect" for i in inv])
-            else:
-                rect_rows = np.zeros(n, dtype=bool)  # WKT docs: general path
-            if rect_rows.any():
-                env = np.array(
-                    [infos[i][1] if infos[i][0] == "rect" else (0, 0, 0, 0) for i in inv]
-                )
-                zx0, zy0, zx1, zy1 = (env[rect_rows, k] for k in range(4))
-                ix0 = np.maximum(xmin[rect_rows], zx0)
-                iy0 = np.maximum(ymin[rect_rows], zy0)
-                ix1 = np.minimum(xmax[rect_rows], zx1)
-                iy1 = np.minimum(ymax[rect_rows], zy1)
-                nonempty = (ix0 < ix1) & (iy0 < iy1)
-                areas[rect_rows] = np.where(
-                    nonempty, (ix1 - ix0) * (iy1 - iy0), 0.0
-                )
-                idx = np.flatnonzero(rect_rows)[nonempty]
-                for j, k in enumerate(np.flatnonzero(nonempty)) if emit_wkt else ():
-                    x0s, y0s = _fmt(ix0[k]), _fmt(iy0[k])
-                    x1s, y1s = _fmt(ix1[k]), _fmt(iy1[k])
-                    wkts[idx[j]] = (
-                        f"POLYGON (({x0s} {y0s},{x1s} {y0s},"
-                        f"{x1s} {y1s},{x0s} {y1s},{x0s} {y0s}))"
+                areas, rect_rows = zone_clip_areas(rects, codes, infos)
+                if emit_wkt:  # rect x rect pieces are single rectangles
+                    idx = np.flatnonzero(rect_rows)
+                    ix0, iy0, ix1, iy1, nonempty = _rect_clip(
+                        rects[idx], _zone_envs(infos)[codes[idx]]
                     )
-            # general zones: one vectorized S-H pass per distinct zone
-            for i in range(len(uniq)):
-                rows = np.flatnonzero((inv == i) & ~rect_rows)
-                if rows.size == 0:
-                    continue
-                info = infos[i]
-                if doc_wkt_col is None:
-                    tris, w = info[1]
-                    rects = np.c_[xmin[rows], ymin[rows], xmax[rows], ymax[rows]]
-                    areas[rows] = rects_polys_intersection_area(rects, tris, w)
-                else:
-                    zpolys = info[2]
-                    for r in rows:  # pytest-scale path: WKT x WKT pairs
-                        typ, payload = parse_wkt(pdf[doc_wkt_col].iat[r])
-                        dpolys = payload if typ == "MULTIPOLYGON" else [payload]
-                        areas[r] = polys_pair_intersection_area(dpolys, zpolys)
+                    for j in np.flatnonzero(nonempty):
+                        x0s, y0s = _fmt(ix0[j]), _fmt(iy0[j])
+                        x1s, y1s = _fmt(ix1[j]), _fmt(iy1[j])
+                        wkts[idx[j]] = (
+                            f"POLYGON (({x0s} {y0s},{x1s} {y0s},"
+                            f"{x1s} {y1s},{x0s} {y1s},{x0s} {y0s}))"
+                        )
+            else:
+                areas = np.zeros(n, dtype=np.float64)
+                for r in range(n):  # pytest-scale path: WKT x WKT pairs
+                    typ, payload = parse_wkt(pdf[doc_wkt_col].iat[r])
+                    dpolys = payload if typ == "MULTIPOLYGON" else [payload]
+                    zpolys = infos[codes[r]][2]
+                    areas[r] = polys_pair_intersection_area(dpolys, zpolys)
             out = pdf.copy()
             out["piece_area"] = areas
             out["piece_wkt"] = wkts

@@ -16,9 +16,14 @@ replacing the reference's nested loop + prepared-geometry pretest:
   3. **Refine**: envelope prefilter JVM-side (the reference's bbox
      short-circuit, ogrgeometry.cpp:586-593), then exact ray-cast PIP in
      an Arrow-batched pandas UDF (port of ogrlinearring.cpp:453-532).
-     The refine reads the zone WKT column CARRIED THROUGH THE JOIN and
-     parses each distinct geometry once per executor (LRU-style cache) —
-     no driver-side materialization of the method layer in either
+     The refine reads the zone WKT column CARRIED THROUGH THE JOIN,
+     flattens each distinct geometry into an edge table once per
+     executor (bounded cache), and tests the WHOLE batch in one grouped
+     kernel (``geometry.pip.points_in_polygons``): every candidate row
+     is expanded against its own zone's rings and edges with
+     ``np.repeat`` + offsets, so the cost is a fixed number of numpy
+     passes per batch however many distinct zones it holds.  No
+     driver-side materialization of the method layer in either
      strategy, so zone layers beyond driver memory still work.
 
 Output = point columns ⊕ zone columns (ogrlayer.cpp:3550-3560 result
@@ -42,6 +47,12 @@ from pyspark.sql.types import (
 
 from gdal_spark.geometry import mercator
 from gdal_spark.geometry.envelope import wkt_envelope, wkt_is_rectangle
+from gdal_spark.geometry.pip import (
+    RingTable,
+    points_in_polygons,
+    ring_table,
+    stack_ring_tables,
+)
 from gdal_spark.geometry.wkt import parse_wkt
 
 DEFAULT_ZOOM = 6  # ~5.6° cells at equator; zone envelopes span O(10) cells
@@ -352,62 +363,96 @@ def zone_cell_index_hex(
     return zones.mapInPandas(expand, out_schema)
 
 
-# executor-level parsed-geometry cache: the refine kernel reads the zone
+# executor-level geometry caches: the refine kernel reads the zone
 # WKT CARRIED THROUGH THE JOIN (no driver collect — a method layer that
-# doesn't fit the driver still works), parsing each distinct geometry at
-# most once per executor process.
+# doesn't fit the driver still works), flattening each distinct geometry
+# into its edge table at most once per executor process.  Parsed WKT
+# payloads are cached too, for the rasterize / cutline kernels.
 _GEOM_CACHE: dict[str, list] = {}
+_TABLE_CACHE: dict = {}
 _GEOM_CACHE_MAX = 65536
+
+
+def _parse_polys(key, geom_format: str = "wkt") -> list:
+    """WKT text or WKB bytes -> multipolygon payload (list of polygons)."""
+    if geom_format == "wkb":
+        from gdal_spark.geometry.wkb import wkb_to_payload
+
+        typ, payload = wkb_to_payload(key)
+    else:
+        typ, payload = parse_wkt(key)
+    return payload if typ == "MULTIPOLYGON" else [payload]
 
 
 def _polys_cached(wkt: str) -> list:
     polys = _GEOM_CACHE.get(wkt)
     if polys is None:
-        typ, payload = parse_wkt(wkt)
-        polys = payload if typ == "MULTIPOLYGON" else [payload]
+        polys = _parse_polys(wkt)
         if len(_GEOM_CACHE) >= _GEOM_CACHE_MAX:
             _GEOM_CACHE.clear()
         _GEOM_CACHE[wkt] = polys
     return polys
 
 
-def _polys_cached_wkb(buf: bytes) -> list:
-    """Same executor cache for WKB BinaryType geometry (bytes hash)."""
-    buf = bytes(buf)  # Arrow may hand back bytearray (unhashable)
-    polys = _GEOM_CACHE.get(buf)
-    if polys is None:
-        from gdal_spark.geometry.wkb import wkb_to_payload
+def _ring_table_cached(key, geom_format: str = "wkt") -> RingTable:
+    """Edge table of one zone geometry (WKT str or WKB bytes key)."""
+    table = _TABLE_CACHE.get(key)
+    if table is None:
+        table = ring_table(_parse_polys(key, geom_format))
+        if len(_TABLE_CACHE) >= _GEOM_CACHE_MAX:
+            _TABLE_CACHE.clear()
+        _TABLE_CACHE[key] = table
+    return table
 
-        typ, payload = wkb_to_payload(buf)
-        polys = payload if typ == "MULTIPOLYGON" else [payload]
-        if len(_GEOM_CACHE) >= _GEOM_CACHE_MAX:
-            _GEOM_CACHE.clear()
-        _GEOM_CACHE[buf] = polys
-    return polys
+
+def factorize_geometry(col: pd.Series, geom_format: str = "wkt"):
+    """(codes, uniques) of a geometry column, codes -1 for nulls.
+
+    Hashes instead of sorting: ``pd.factorize`` on an object column is
+    ~3x faster than ``np.unique``.  WKB values go to ``bytes`` first —
+    Arrow may hand back (unhashable) bytearray."""
+    vals = col.to_numpy(dtype=object)
+    if geom_format == "wkb":
+        vals = np.array(
+            [None if v is None else bytes(v) for v in vals], dtype=object
+        )
+    return pd.factorize(vals)
+
+
+def grouped_pip(xs: np.ndarray, ys: np.ndarray, codes, uniques, table_of):
+    """Row i inside geometry ``uniques[codes[i]]`` (null code: False) —
+    one grouped ray-cast over the batch (``points_in_polygons``), the
+    per-geometry edge tables coming from ``table_of(key)``."""
+    out = np.zeros(len(xs), dtype=bool)
+    if len(uniques) == 0:
+        return out
+    table = stack_ring_tables([table_of(k) for k in uniques])
+    ok = codes >= 0
+    out[ok] = points_in_polygons(xs[ok], ys[ok], codes[ok], table)
+    return out
 
 
 def _make_refine_udf(geom_format: str = "wkt"):
     """pandas UDF testing (lon, lat) against the zone polygon whose WKT
-    (or WKB bytes) rides on the candidate row.  Batch work is grouped by
-    UNIQUE geometry (np.unique), so the ray-cast stays vectorized per
-    zone."""
-    from gdal_spark.geometry.pip import points_in_polygon
+    (or WKB bytes) rides on the candidate row: the batch's distinct
+    geometries are factorized once and the whole batch goes through
+    the grouped ray-cast kernel in a fixed number of numpy passes."""
 
-    polys_of = _polys_cached_wkb if geom_format == "wkb" else _polys_cached
+    def table_of(key):
+        return _ring_table_cached(key, geom_format)
 
     @F.pandas_udf(BooleanType())
     def refine(lon: pd.Series, lat: pd.Series, wkt: pd.Series) -> pd.Series:
-        xs = lon.to_numpy(dtype=np.float64)
-        ys = lat.to_numpy(dtype=np.float64)
-        uniq, inv = np.unique(wkt.to_numpy(dtype=object), return_inverse=True)
-        out = np.zeros(len(xs), dtype=bool)
-        for i, s in enumerate(uniq):
-            mask = inv == i
-            hit = np.zeros(int(mask.sum()), dtype=bool)
-            for rings in polys_of(s):
-                hit |= points_in_polygon(xs[mask], ys[mask], rings)
-            out[mask] = hit
-        return pd.Series(out)
+        codes, uniq = factorize_geometry(wkt, geom_format)
+        return pd.Series(
+            grouped_pip(
+                lon.to_numpy(dtype=np.float64),
+                lat.to_numpy(dtype=np.float64),
+                codes,
+                uniq,
+                table_of,
+            )
+        )
 
     return refine
 

@@ -20,8 +20,8 @@ When to prefer which at 100 TB:
 Zone-layer contract: dim-sized (driver-materialized + rebroadcast, the
 same documented contract as the kNN target table; the carried-WKT cell
 join remains the beyond-driver-memory path).  Exactness: candidates are
-envelope hits; every candidate goes through the SAME per-unique-zone
-vectorized ray-cast as pip_join's refine, so results are bit-identical
+envelope hits; every candidate goes through the SAME grouped ray-cast
+kernel as pip_join's refine, so results are bit-identical
 to the cell-join twin (pinned in tests/test_strtree_join.py).
 """
 
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from gdal_spark.geometry.envelope import wkt_envelope
-from gdal_spark.geometry.pip import points_in_polygon
+from gdal_spark.geometry.pip import points_in_polygons, ring_table, stack_ring_tables
 from gdal_spark.geometry.strtree import STRTree
 from gdal_spark.geometry.wkt import parse_wkt
 
@@ -70,12 +70,14 @@ def _tree_of(bc) -> tuple:
     got = _TREE_CACHE.get(key)
     if got is None:
         boxes = np.asarray([wkt_envelope(w) for w in wkts], dtype=np.float64)
-        polys = []
+        tables = []
         for w in wkts:
             typ, payload = parse_wkt(w)
-            polys.append(payload if typ == "MULTIPOLYGON" else [payload])
+            tables.append(ring_table(payload if typ == "MULTIPOLYGON" else [payload]))
         _TREE_CACHE.clear()  # one live method layer per process is plenty
-        got = (STRTree(boxes), np.asarray(ids, dtype=np.int64), polys)
+        # the whole layer's edges in one table: tree hits index it as is
+        table = stack_ring_tables(tables) if tables else None
+        got = (STRTree(boxes), np.asarray(ids, dtype=np.int64), table)
         _TREE_CACHE[key] = got
     return got
 
@@ -109,20 +111,14 @@ def pip_join_strtree(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tree, ids, polys = _tree_of(bc)
+        tree, ids, table = _tree_of(bc)
         for pdf in batches:
             xs = pdf[lon_col].to_numpy(dtype=np.float64)
             ys = pdf[lat_col].to_numpy(dtype=np.float64)
             qi, zi = tree.query_points(xs, ys)
-            keep = np.zeros(len(qi), dtype=bool)
-            # refine vectorized per candidate zone (dim-sized loop)
-            for z in np.unique(zi):
-                m = zi == z
-                hit = np.zeros(int(m.sum()), dtype=bool)
-                for rings in polys[z]:
-                    hit |= points_in_polygon(xs[qi[m]], ys[qi[m]], rings)
-                keep[m] = hit
-            qi, zi = qi[keep], zi[keep]
+            if len(qi):  # one grouped ray-cast over every tree hit
+                keep = points_in_polygons(xs[qi], ys[qi], zi, table)
+                qi, zi = qi[keep], zi[keep]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy()[qi],
@@ -165,10 +161,10 @@ def clip_join_strtree(
     Same dim-layer contract as :func:`pip_join_strtree`; the corpus
     side's envelopes query the tree in ONE mapInPandas (zero shuffle,
     zero join operator, no zone-side cell fan-out).  Candidates resolve
-    through the SAME classified-zone kernels as overlay._clip_kernel —
-    rectangle zones via the identical IEEE min/max math, general
-    concave/holed/multipart zones via the fan-triangle
-    rects_polys_intersection_area — and the same AREA_EPS drop rule, so
+    through the SAME classified-zone kernel as overlay._clip_kernel
+    (``overlay.zone_clip_areas``: rectangle zones via the identical IEEE
+    min/max math, general concave/holed/multipart zones via the grouped
+    fan-triangle clip) and the same AREA_EPS drop rule, so
     output is BIT-IDENTICAL to intersection_join(emit_wkt=False)
     (pinned in tests/test_strtree_join.py; same DuckDB oracle as
     clip_general in the registry)."""
@@ -193,34 +189,20 @@ def clip_join_strtree(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from gdal_spark.geometry.boolean import rects_polys_intersection_area
-        from gdal_spark.operators.overlay import AREA_EPS, _classify_zone
+        from gdal_spark.operators.overlay import (
+            AREA_EPS,
+            _classify_zone,
+            zone_clip_areas,
+        )
 
         tree, ids, wkts = _clip_tree_of(bc)
         for pdf in batches:
-            x0 = pdf["xmin"].to_numpy(np.float64)
-            y0 = pdf["ymin"].to_numpy(np.float64)
-            x1 = pdf["xmax"].to_numpy(np.float64)
-            y1 = pdf["ymax"].to_numpy(np.float64)
-            qi, zi = tree.query_boxes(np.column_stack([x0, y0, x1, y1]))
-            areas = np.zeros(len(qi), dtype=np.float64)
-            for z in np.unique(zi):
-                m = zi == z
-                info = _classify_zone(wkts[z])
-                if info[0] == "rect":
-                    zx0, zy0, zx1, zy1 = info[1]
-                    ix0 = np.maximum(x0[qi[m]], zx0)
-                    iy0 = np.maximum(y0[qi[m]], zy0)
-                    ix1 = np.minimum(x1[qi[m]], zx1)
-                    iy1 = np.minimum(y1[qi[m]], zy1)
-                    nonempty = (ix0 < ix1) & (iy0 < iy1)
-                    areas[m] = np.where(
-                        nonempty, (ix1 - ix0) * (iy1 - iy0), 0.0
-                    )
-                else:
-                    tris, w = info[1]
-                    rects = np.c_[x0[qi[m]], y0[qi[m]], x1[qi[m]], y1[qi[m]]]
-                    areas[m] = rects_polys_intersection_area(rects, tris, w)
+            rects = pdf[["xmin", "ymin", "xmax", "ymax"]].to_numpy(np.float64)
+            qi, zi = tree.query_boxes(rects)
+            # hit zones renumbered densely: one grouped clip per batch
+            codes, hit = pd.factorize(zi)
+            infos = [_classify_zone(wkts[z]) for z in hit]
+            areas, _ = zone_clip_areas(rects[qi], codes, infos)
             keep = areas > AREA_EPS
             yield pd.DataFrame(
                 {

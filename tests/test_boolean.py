@@ -15,12 +15,15 @@ from gdal_spark.geometry.boolean import (
     polys_area,
     polys_pair_intersection_area,
     rectilinear_rects,
+    rects_geoms_intersection_area,
     rects_polys_intersection_area,
+    triangle_table,
     weighted_triangles,
 )
 from gdal_spark.geometry.clip import clip_polygon_convex, shoelace_area
 from gdal_spark.geometry.pip import points_in_polygon
 from gdal_spark.geometry.wkt import parse_wkt
+from gdal_spark.zones import FANCY_ZONES
 
 
 def P(wkt):
@@ -193,3 +196,107 @@ class TestBboxPrefilterBitParity:
             got = rects_polys_intersection_area(rects, tris, w)
             exp = self._unfiltered(rects, tris, w)
             np.testing.assert_array_equal(got, exp)
+
+
+def _clip_loop(rects, gidx, geoms):
+    """Reference: one rects_polys_intersection_area call per geometry."""
+    out = np.zeros(len(rects))
+    for g, polys in enumerate(geoms):
+        m = gidx == g
+        if m.any():
+            tris, w = weighted_triangles(polys)
+            out[m] = rects_polys_intersection_area(rects[m], tris, w)
+    return out
+
+
+class TestGroupedClip:
+    """The batch-grouped clip (rects_geoms_intersection_area) must agree
+    bit for bit with the per-geometry loop it replaces."""
+
+    FANCY = [P(w) for _, w in FANCY_ZONES] + [P(C_SHAPE), P(L_HOLE)]
+
+    def _check(self, rects, gidx, geoms):
+        rects = np.asarray(rects, dtype=np.float64).reshape(-1, 4)
+        gidx = np.asarray(gidx, dtype=np.int64)
+        table = triangle_table([weighted_triangles(p) for p in geoms])
+        got = rects_geoms_intersection_area(rects, gidx, table)
+        np.testing.assert_array_equal(got, _clip_loop(rects, gidx, geoms))
+        return got
+
+    def _rects(self, rng, n, lo=(-45, -25), hi=(80, 25)):
+        x0 = rng.uniform(lo[0], hi[0], n)
+        y0 = rng.uniform(lo[1], hi[1], n)
+        return np.c_[x0, y0, x0 + rng.uniform(0.1, 12, n),
+                     y0 + rng.uniform(0.1, 12, n)]
+
+    def test_fancy_zones_random(self):
+        rng = np.random.default_rng(17)
+        n = 5000
+        got = self._check(
+            self._rects(rng, n), rng.integers(0, len(self.FANCY), n), self.FANCY
+        )
+        assert (got > 0).sum() > 100
+
+    def test_edges_and_vertices_snapped(self):
+        # rect corners on a unit lattice: touch zone edges and vertices
+        rng = np.random.default_rng(19)
+        n = 3000
+        r = np.round(self._rects(rng, n))
+        r[:, 2:] = np.maximum(r[:, 2:], r[:, :2] + 1)
+        self._check(r, rng.integers(0, len(self.FANCY), n), self.FANCY)
+
+    def test_degenerate_soup(self):
+        # a zone with no triangles (collinear ring) clips to exactly 0
+        flat = [[np.array([[0.0, 0], [1, 0], [2, 0], [0, 0]])]]
+        got = self._check(
+            [[-1, -1, 3, 3], [0, 0, 10, 10]], [0, 1], [flat, P(SQ)]
+        )
+        assert got.tolist() == [0.0, 100.0]
+
+    def test_empty_batch(self):
+        got = self._check(np.empty((0, 4)), [], self.FANCY)
+        assert got.shape == (0,)
+
+    def test_single_repeated_geometry(self):
+        rng = np.random.default_rng(23)
+        r = self._rects(rng, 2000, lo=(-2, -2), hi=(20, 20))
+        self._check(r, np.zeros(2000, dtype=np.int64), [P(DONUT)])
+
+    def test_chunked_batch(self, monkeypatch):
+        from gdal_spark.geometry import boolean
+
+        monkeypatch.setattr(boolean, "CLIP_CHUNK_PAIRS", 16)
+        rng = np.random.default_rng(29)
+        n = 2000
+        gidx = np.sort(rng.integers(0, len(self.FANCY), n))
+        self._check(self._rects(rng, n), gidx, self.FANCY)
+
+    def test_wkb_bytearray_zones(self):
+        # the overlay clip path: WKB keys factorized as bytes, zones
+        # classified once, general zones through the grouped kernel
+        import pandas as pd
+
+        from gdal_spark.geometry.wkb import wkt_payload_to_wkb
+        from gdal_spark.operators.overlay import _classify_zone, zone_clip_areas
+        from gdal_spark.operators.pip_join import factorize_geometry
+
+        wkts = [w for _, w in FANCY_ZONES] + [C_SHAPE, L_HOLE]
+        blobs = [wkt_payload_to_wkb(*parse_wkt(w)) for w in wkts]
+        rng = np.random.default_rng(31)
+        n = 3000
+        gidx = rng.integers(0, len(blobs), n)
+        rects = self._rects(rng, n)
+        codes, uniq = factorize_geometry(
+            pd.Series([bytearray(blobs[g]) for g in gidx]), "wkb"
+        )
+        infos = [_classify_zone(k, "wkb") for k in uniq]
+        got, rect_rows = zone_clip_areas(rects, codes, infos)
+        # the adjacent squares (single-ring rectangles) take the min/max
+        # path, every other zone the grouped triangle kernel
+        assert rect_rows.any() and not rect_rows.all()
+        want = np.zeros(n)
+        gen = ~rect_rows
+        want[gen] = _clip_loop(rects[gen], gidx[gen], [P(w) for w in wkts])
+        np.testing.assert_array_equal(got[gen], want[gen])
+        ref_rect = _clip_loop(rects, gidx, [P(w) for w in wkts])
+        np.testing.assert_allclose(got[rect_rows], ref_rect[rect_rows], atol=1e-9)

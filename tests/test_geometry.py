@@ -18,8 +18,14 @@ from gdal_spark.geometry.clip import (
     shoelace_area,
 )
 from gdal_spark.geometry.envelope import envelopes_intersect, wkt_envelope
-from gdal_spark.geometry.pip import points_in_polygon_wkt, points_in_ring
+from gdal_spark.geometry.pip import (
+    points_in_geometries,
+    points_in_polygon,
+    points_in_polygon_wkt,
+    points_in_ring,
+)
 from gdal_spark.geometry.wkt import parse_wkt, point_wkt, polygon_wkt
+from gdal_spark.zones import FANCY_ZONES
 
 A1 = "POLYGON((1 2, 1 3, 3 3, 3 2, 1 2))"  # ogr_layer_algebra.py:61
 A2 = "POLYGON((5 2, 5 3, 7 3, 7 2, 5 2))"  # ogr_layer_algebra.py:67
@@ -103,6 +109,157 @@ class TestPip:
         # boundary-free random floats: exact agreement with open-box test
         assert (got == expect).all()
 
+
+
+def _payload(wkt):
+    typ, payload = parse_wkt(wkt)
+    return payload if typ == "MULTIPOLYGON" else [payload]
+
+
+def _pip_loop(xs, ys, gidx, geoms):
+    """Reference: one points_in_polygon call per geometry and part."""
+    out = np.zeros(len(xs), dtype=bool)
+    for g, polys in enumerate(geoms):
+        m = gidx == g
+        for rings in polys:
+            out[m] |= points_in_polygon(xs[m], ys[m], rings)
+    return out
+
+
+class TestGroupedPip:
+    """The batch-grouped kernel (points_in_geometries) must agree bit for
+    bit with the per-geometry points_in_polygon loop it replaces."""
+
+    FANCY = [_payload(w) for _, w in FANCY_ZONES]
+
+    def _check(self, xs, ys, gidx, geoms):
+        xs = np.asarray(xs, dtype=np.float64)
+        ys = np.asarray(ys, dtype=np.float64)
+        gidx = np.asarray(gidx, dtype=np.int64)
+        got = points_in_geometries(xs, ys, gidx, geoms)
+        assert got.dtype == bool
+        np.testing.assert_array_equal(got, _pip_loop(xs, ys, gidx, geoms))
+        return got
+
+    def test_fancy_zones_random(self):
+        rng = np.random.default_rng(7)
+        n = 20_000
+        # half-integer lattice: lands on vertices and edges, plus noise
+        xs = np.round(rng.uniform(-45, 80, n) * 2) / 2
+        ys = np.round(rng.uniform(-25, 25, n) * 2) / 2
+        xs[::3] += rng.normal(0, 1e-3, xs[::3].size)
+        gidx = rng.integers(0, len(self.FANCY), n)
+        assert self._check(xs, ys, gidx, self.FANCY).any()
+
+    def test_vertices_and_edges(self):
+        # every vertex and every edge midpoint of every fancy zone, each
+        # tested against every zone: horizontal and vertical edges,
+        # shared edges of the adjacent squares, hole boundaries
+        pts = []
+        for polys in self.FANCY:
+            for rings in polys:
+                for r in rings:
+                    pts.append(r)
+                    pts.append((r[1:] + r[:-1]) / 2)
+        pts = np.concatenate(pts)
+        k = len(self.FANCY)
+        xs = np.repeat(pts[:, 0], k)
+        ys = np.repeat(pts[:, 1], k)
+        gidx = np.tile(np.arange(k), len(pts))
+        self._check(xs, ys, gidx, self.FANCY)
+
+    def test_known_answers(self):
+        donut, cshape, sq_a, sq_b, multi = self.FANCY
+        got = self._check(
+            [10, 10, 40, 31, -30, -30, 61, 71, 66],
+            [2, 10, 10, 10, -15, -15, 1, 1, 1],
+            [0, 0, 1, 1, 2, 3, 4, 4, 4],
+            self.FANCY,
+        )
+        # shared edge x=-30 belongs to the right square only (half-open)
+        assert got.tolist() == [True, False, False, True, False, True,
+                                True, True, False]
+
+    def test_degenerate_rings(self):
+        # rings with < 4 vertices never contain anything (early return)
+        two = np.array([[0.0, 0.0], [5.0, 5.0]])
+        tri_open = np.array([[0.0, 0.0], [5.0, 0.0], [0.0, 0.0]])
+        square = _payload("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")[0][0]
+        geoms = [[[two]], [[square, tri_open]], [[tri_open]], []]
+        xs = np.array([1.0, 1.0, 1.0, 1.0, 2.0])
+        ys = np.array([1.0, 1.0, 0.0, 1.0, 2.0])
+        got = self._check(xs, ys, [0, 1, 2, 3, 1], geoms)
+        assert got.tolist() == [False, True, False, False, True]
+
+    def test_empty_batch(self):
+        got = self._check([], [], [], self.FANCY)
+        assert got.shape == (0,)
+        assert points_in_geometries([], [], [], []).shape == (0,)
+
+    def test_single_repeated_geometry(self):
+        rng = np.random.default_rng(3)
+        xs = rng.uniform(-2, 22, 5000)
+        ys = rng.uniform(-2, 22, 5000)
+        self._check(xs, ys, np.zeros(5000, dtype=np.int64), self.FANCY[:1])
+
+    def test_chunked_batch(self, monkeypatch):
+        # force many chunks, including a chunk boundary inside a run of
+        # rows of one geometry
+        from gdal_spark.geometry import pip
+
+        monkeypatch.setattr(pip, "PIP_CHUNK_EDGES", 64)
+        rng = np.random.default_rng(5)
+        n = 3000
+        xs = rng.uniform(-45, 80, n)
+        ys = rng.uniform(-25, 25, n)
+        gidx = np.sort(rng.integers(0, len(self.FANCY), n))
+        self._check(xs, ys, gidx, self.FANCY)
+        table = pip.stack_ring_tables([pip.ring_table(g) for g in self.FANCY])
+        assert len(pip.chunk_bounds(table.geom_nedge[gidx], 64)) > 100
+
+    def test_wkb_bytearray_keys(self):
+        import pandas as pd
+
+        from gdal_spark.geometry.wkb import wkt_payload_to_wkb
+        from gdal_spark.operators.pip_join import (
+            _ring_table_cached,
+            factorize_geometry,
+            grouped_pip,
+        )
+
+        blobs = []
+        for _, w in FANCY_ZONES:
+            typ, payload = parse_wkt(w)
+            blobs.append(wkt_payload_to_wkb(typ, payload))
+        rng = np.random.default_rng(11)
+        n = 4000
+        gidx = rng.integers(0, len(blobs), n)
+        xs = rng.uniform(-45, 80, n)
+        ys = rng.uniform(-25, 25, n)
+        col = pd.Series([bytearray(blobs[g]) for g in gidx])
+        codes, uniq = factorize_geometry(col, "wkb")
+        assert len(uniq) == len(set(gidx.tolist()))
+        got = grouped_pip(
+            xs, ys, codes, uniq, lambda k: _ring_table_cached(k, "wkb")
+        )
+        np.testing.assert_array_equal(got, _pip_loop(xs, ys, gidx, self.FANCY))
+
+    def test_null_keys_are_outside(self):
+        import pandas as pd
+
+        from gdal_spark.operators.pip_join import (
+            _ring_table_cached,
+            factorize_geometry,
+            grouped_pip,
+        )
+
+        w = FANCY_ZONES[0][1]
+        codes, uniq = factorize_geometry(pd.Series([w, None, w]))
+        got = grouped_pip(
+            np.array([5.0, 5.0, 10.0]), np.array([5.0, 5.0, 10.0]),
+            codes, uniq, _ring_table_cached,
+        )
+        assert got.tolist() == [True, False, False]
 
 class TestMercator:
     def test_constants_match_reference_docs(self):

@@ -309,3 +309,56 @@ class TestAttributes:
         assert keys == ["lang"]
         assert vals == ["de", "en"]  # sorted distinct
         assert tags == [(0, 0), (0, 1), (0, 1)]  # fid order 1(de),5(en),9(en)
+
+
+def test_attr_writer_parity_many_values():
+    """>= 128 distinct attribute values: value indices need two varint
+    bytes, so the tags length prefix is 3, not 2 — scalar and
+    vectorized writers must still agree byte for byte."""
+    import numpy as np
+
+    from gdal_spark.operators.mvt import mvt_attr_point_tile, mvt_attr_point_tile_np
+
+    rng = np.random.RandomState(17)
+    n = 400
+    f = rng.permutation(n).astype(np.int64) * 1000
+    x = rng.randint(0, 4096, n).astype(np.int64)
+    y = rng.randint(0, 4096, n).astype(np.int64)
+    a = np.array([f"v{i:03d}" for i in rng.randint(0, 300, n)], dtype=object)
+    assert len(set(a.tolist())) >= 128
+    want = mvt_attr_point_tile(list(zip(f.tolist(), x.tolist(), y.tolist(), a)))
+    assert mvt_attr_point_tile_np(f, x, y, a) == want
+    assert b"\x12\x03\x00" in want  # tags [0, vi] with a 2-byte vi
+
+
+def test_numpy_writers_refuse_oversized_values():
+    """Values beyond the 5-byte varint range (or negative ones) would
+    be written truncated: the vectorized writers raise instead."""
+    import numpy as np
+
+    from gdal_spark.operators.mvt import (
+        _one_byte,
+        mvt_attr_point_tile_np,
+        mvt_point_tile_np,
+        mvt_rect_tile_np,
+    )
+
+    one = np.array([1], dtype=np.int64)
+    big = np.array([1 << 35], dtype=np.int64)
+    with pytest.raises(ValueError, match="out of range"):
+        mvt_point_tile_np(big, one, one)
+    with pytest.raises(ValueError, match="out of range"):
+        mvt_point_tile_np(one, -one, one)
+    with pytest.raises(ValueError, match="out of range"):
+        mvt_rect_tile_np(big, one, one, one + 1, one + 1)
+    with pytest.raises(ValueError, match="out of range"):
+        mvt_attr_point_tile_np(big, one, one, np.array(["a"], dtype=object))
+    # the largest accepted value still round-trips byte-identically
+    from gdal_spark.operators.mvt import mvt_point_tile
+
+    top = (1 << 35) - 1
+    assert mvt_point_tile_np(np.array([top]), one, one) == mvt_point_tile(
+        [(top, 1, 1)]
+    )
+    with pytest.raises(ValueError, match="multi-byte"):
+        _one_byte(np.array([5, 128]), "feature")

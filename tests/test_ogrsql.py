@@ -367,6 +367,25 @@ class TestModes:
         )
         assert rows(out) == [(1,), (2,), (9,)]
 
+    def test_distinct_dedupes_before_limit_offset(self, spark, dim_layer):
+        # the raw rows hold ref=1 twice ahead of the limit: LIMIT and
+        # OFFSET must count DISTINCT rows, not raw ones
+        def q(sql):
+            out = execute_sql(spark, sql, {"dim": dim_layer})
+            return [tuple(r) for r in out.collect()]
+
+        assert q("SELECT DISTINCT ref FROM dim ORDER BY ref LIMIT 2") == [
+            (1,), (2,)
+        ]
+        assert q(
+            "SELECT DISTINCT ref AS r FROM dim ORDER BY r DESC LIMIT 2 OFFSET 1"
+        ) == [(2,), (1,)]
+        assert sorted(q("SELECT DISTINCT ref FROM dim LIMIT 3")) == [
+            (1,), (2,), (9,)
+        ]
+        with pytest.raises(OgrSqlError, match="DISTINCT"):
+            q("SELECT DISTINCT ref FROM dim ORDER BY label")
+
 
 class TestParserErrors:
     def test_unknown_layer(self, spark, poly_layer):
